@@ -176,6 +176,88 @@ def test_mv_to_netcdf_and_sp_netcdf_split(spark, tmp_path, grib_file):
     assert any("d2m" in f for f in made) and any("u10" in f for f in made)
 
 
+def _jobs_run(spark, fn) -> int:
+    """Spark jobs ``fn`` starts, counted under a job group once the
+    listener bus has delivered every job event."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_mv_runs_one_job_to_parquet_and_few_to_zarr(spark, tmp_path, grib_file, capsys):
+    """The parquet sink counts rows on the write (no read-back job); the
+    Zarr sink derives its axes in one aggregate, not three distinct
+    passes that each decode the input again."""
+    out = str(tmp_path / "rows.parquet")
+    argv = ["mv", "--uris", grib_file, "--output", out]
+    assert _jobs_run(spark, lambda: main(argv)) == 1
+    printed = capsys.readouterr().out
+    n = spark.read.parquet(out).count()
+    assert n == 12 and f"wrote {n} row(s)" in printed
+
+    store = str(tmp_path / "store.zarr")
+    argv = ["mv", "--uris", grib_file, "--output", store, "--zarr", "--chunks", "1,2,2"]
+    assert _jobs_run(spark, lambda: main(argv)) <= 5
+
+
+def test_mv_variables_pushdown(spark, tmp_path, grib_file):
+    """--variables reaches the decoder: only the requested variables land
+    in the sink, and an unknown name fails in the opener's probe."""
+    out = str(tmp_path / "rows.parquet")
+    assert main(["mv", "--uris", grib_file, "--output", out, "--variables", "u10"]) == 0
+    df = spark.read.parquet(out)
+    assert df.columns == ["time", "latitude", "longitude", "u10"]
+    assert sorted(r.u10 for r in df.collect()) == [v / 4 + 11.0 for v in range(12)]
+    with pytest.raises(ValueError, match="unknown variables"):
+        main(["mv", "--uris", grib_file, "--output", out, "--variables", "u10,nope"])
+
+
+def test_zarr_axes_one_aggregate_matches_distinct(spark, tmp_path):
+    """One-aggregate axes equal the three distinct() collects they
+    replace on a single-hour grid crossing 0: latitude descending, and
+    0.0 once even when the rows carry both -0.0 and 0.0."""
+    import math
+
+    from pyspark.sql import functions as F
+
+    from weather_tools_spark.cli import zarr_axes
+    from weather_tools_spark.sources.grib2 import write_grib2
+    from weather_tools_spark.sources.opener import open_dataset
+
+    p = str(tmp_path / "zero.grib2")
+    lats, lons = np.array([0.5, 0.25, 0.0, -0.25]), np.array([-0.5, -0.25, 0.0, 0.25, 0.5])
+    write_grib2(p, [{"param": "d2m", "ref_time": "2024-01-01T06:00", "lats": lats,
+                     "lons": lons, "values": np.ones((4, 5))}])
+    df = open_dataset(spark, p)
+    neg = df.withColumn(
+        "longitude", F.when(F.col("longitude") == 0.0, F.lit(-0.0)).otherwise(F.col("longitude"))
+    ).withColumn(
+        "latitude", F.when(F.col("latitude") == 0.0, F.lit(-0.0)).otherwise(F.col("latitude"))
+    )
+    df = neg.unionByName(df)
+
+    times, got_lats, got_lons = zarr_axes(df)
+    assert times == [r[0].isoformat() for r in df.select("time").distinct().orderBy("time").collect()]
+    assert got_lats == [
+        r[0] for r in df.select("latitude").distinct().orderBy(F.col("latitude").desc()).collect()
+    ]
+    assert got_lons == [r[0] for r in df.select("longitude").distinct().orderBy("longitude").collect()]
+    assert len(times) == 1
+    assert got_lats == list(lats) and got_lons == list(lons)
+    for axis in (got_lats, got_lons):
+        zeros = [v for v in axis if v == 0.0]
+        assert len(zeros) == 1 and math.copysign(1.0, zeros[0]) == 1.0
+
+
 def test_dlv2_cli_drives_control_plane(capsys):
     """The dlv2 subcommand mirrors the reference weather-dl-v2 CLI
     table against a live control-plane server."""

@@ -210,6 +210,38 @@ def test_shingle_df_cap_paths_identical(spark, monkeypatch):
     assert w == s and len(w) > 0
 
 
+def test_docs_probe_reads_footers_only_for_local_paths(spark, tmp_path, monkeypatch):
+    """The df-cap probe reads parquet footers for file: paths only: a
+    remote URI whose path names an unrelated local file goes straight to
+    the limit-count probe, so that file's footer is never read."""
+    import pyarrow.parquet as pq
+
+    local = tmp_path / "docs.parquet"
+    spark.createDataFrame([(i,) for i in range(3)], "doc_id long").coalesce(1).write.parquet(
+        str(local)
+    )
+    part = str(next(local.glob("part-*.parquet")))
+    read = []
+    real = pq.read_metadata
+    monkeypatch.setattr(pq, "read_metadata", lambda p: read.append(p) or real(p))
+
+    class Docs:  # 50 rows behind a single input file
+        def __init__(self, uri):
+            self.uri = uri
+
+        def inputFiles(self):
+            return [self.uri]
+
+        def limit(self, k):
+            return spark.range(50).limit(k)
+
+    assert D._docs_at_most(Docs(f"hdfs://{part}"), 10) is False
+    assert read == []
+    # the same file under file: is footer-read: 3 rows, no count job
+    assert D._docs_at_most(Docs(f"file:{part}"), 10) is True
+    assert read == [part]
+
+
 def test_embedding_lsh_pairs_recall_and_exactness(spark, sf_dir):
     # the bucketed kernel must (a) recover >=0.9 of the exact pairs and
     # (b) report the identical cosine for every pair it does find

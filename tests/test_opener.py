@@ -132,6 +132,61 @@ def test_glob_opens_multi_file_collection(spark, tmp_path):
         OP.open_dataset(spark, str(tmp_path / "missing-*.nc"))
 
 
+def _local_work_list(df) -> bool:
+    """The decode's work list is a LocalTableScan directly under
+    MapInPandas, with no Exchange anywhere in the plan."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    lines = plan.splitlines()
+    i = next(k for k, line in enumerate(lines) if "MapInPandas" in line)
+    return "Exchange" not in plan and "LocalTableScan" in lines[i + 1]
+
+
+def test_work_lists_plan_as_local_table_scans(spark, tmp_path):
+    """File globs and Zarr chunk manifests become local relations: no
+    Python-RDD stage, no round-robin shuffle, one partition per unit up
+    to defaultParallelism."""
+    par = spark.sparkContext.defaultParallelism
+    for d in range(5):
+        N3.write_netcdf3(
+            str(tmp_path / f"era5-{d}.nc"),
+            {"time": np.array([1704067200 + d * 3600], dtype=">i4"),
+             "latitude": np.array([10.0]), "longitude": np.array([20.0])},
+            {"d2m": np.array([[[float(d)]]])},
+        )
+    files = OP.open_dataset(spark, str(tmp_path / "era5-*.nc"))
+    assert _local_work_list(files)
+    assert files.rdd.getNumPartitions() == min(5, par)
+
+    store = str(tmp_path / "s.zarr")
+    times = [f"2024-07-01 {h:02d}:00:00" for h in range(8)]
+    meta = ZS.ChunkedDatasetMeta(
+        uri=store, times=times, lats=[50.0, 49.75, 49.5, 49.25],
+        lons=[8.0, 8.25, 8.5, 8.75], chunk_time=2, chunk_lat=2, chunk_lon=2,
+        variables=("d2m",),
+    )
+    rows = [
+        (t.to_pydatetime(), la, lo, float(ti))
+        for ti, t in enumerate(pd.to_datetime(times))
+        for la in meta.lats
+        for lo in meta.lons
+    ]
+    src = spark.createDataFrame(rows, "time timestamp, latitude double, longitude double, d2m double")
+    Z2.write_zarr_v2(src, store, meta)
+
+    full = OP.open_dataset(spark, store)
+    assert _local_work_list(full)
+    assert full.rdd.getNumPartitions() == min(16, par)  # 4 x 2 x 2 chunks
+    assert full.count() == 128
+
+    tr, la = ("2024-07-01 00:00:00", "2024-07-01 02:00:00"), (49.6, 50.0)
+    pruned = OP.open_dataset(spark, store, time_range=tr, lat_range=la)
+    assert _local_work_list(pruned)
+    kept = ZS.prune_chunks(ZS.chunk_manifest(spark, Z2.open_zarr_v2(store)), tr, la).count()
+    assert kept == 2  # one time chunk x one lat chunk x both lon chunks
+    assert pruned.rdd.getNumPartitions() == min(kept, par)
+    assert sorted({r.d2m for r in pruned.collect()}) == [0.0, 1.0]
+
+
 def test_earthengine_uri_gates_clearly():
     with pytest.raises(NotImplementedError, match="earthengine-api"):
         OP.detect("ee://ECMWF/ERA5/HOURLY")

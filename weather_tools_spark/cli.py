@@ -136,9 +136,25 @@ def _manifest_batch(spark, cfg, parts, status: str, seq: int):
 # ---------------------------------------------------------------------------
 
 
+def zarr_axes(df) -> tuple[list[str], list[float], list[float]]:
+    """The Zarr template's (time, latitude, longitude) axes of a
+    long-format frame in ONE aggregate job: ISO times ascending,
+    latitudes descending (ERA5 convention), longitudes ascending. Adding
+    0.0 folds -0.0 into 0.0, as ``distinct()`` would."""
+    from pyspark.sql import functions as F
+
+    row = df.agg(
+        F.array_sort(F.collect_set("time")),
+        F.array_sort(F.collect_set(F.col("latitude") + 0.0)),
+        F.array_sort(F.collect_set(F.col("longitude") + 0.0)),
+    ).first()
+    return [t.isoformat() for t in row[0]], row[1][::-1], row[2]
+
+
 def cmd_mv(args: argparse.Namespace) -> int:
     from pyspark.sql import functions as F
 
+    from weather_tools_spark.operators.metrics import observe_counts
     from weather_tools_spark.sources.opener import open_dataset
 
     spark = _spark("weather-mv")
@@ -146,9 +162,14 @@ def cmd_mv(args: argparse.Namespace) -> int:
     if args.area:
         n, w, s, e = args.area
         lat_range, lon_range = (s, n), (w, e)
-    df = open_dataset(spark, args.uris, lat_range=lat_range, lon_range=lon_range)
-    if args.variables:
-        keep = [v for v in args.variables.split(",") if v]
+    # --variables is pushed into the decoder: pruned variables are never
+    # decoded or serialised, and an unknown name fails in the opener;
+    # the select keeps the requested column order
+    keep = [v for v in args.variables.split(",") if v] or None
+    df = open_dataset(
+        spark, args.uris, lat_range=lat_range, lon_range=lon_range, variables=keep
+    )
+    if keep:
         dims = [c for c in ("time", "latitude", "longitude") if c in df.columns]
         df = df.select(*dims, *keep)
     if args.geo:
@@ -169,8 +190,8 @@ def cmd_mv(args: argparse.Namespace) -> int:
         return 0
     if args.zarr:
         # Zarr sink (the reference's xbeam ChunksToZarr path): derive
-        # the coordinate axes driver-side (axes are dimension-sized —
-        # the same bounded contract as the geo lookup) and hand the
+        # the coordinate axes in one aggregate (axes are dimension-sized
+        # — the same bounded contract as the geo lookup) and hand the
         # long-format rows to the distributed chunk writer.
         from weather_tools_spark.sources.zarr_scan import ChunkedDatasetMeta
         from weather_tools_spark.sources.zarr_v2 import write_zarr_v2
@@ -178,12 +199,7 @@ def cmd_mv(args: argparse.Namespace) -> int:
         if "time" not in df.columns:
             print("--zarr needs a time axis (GRIB/NetCDF input)", file=sys.stderr)
             return 2
-        times = [
-            r[0].isoformat()
-            for r in df.select("time").distinct().orderBy("time").collect()
-        ]
-        lats = [r[0] for r in df.select("latitude").distinct().orderBy(F.col("latitude").desc()).collect()]
-        lons = [r[0] for r in df.select("longitude").distinct().orderBy("longitude").collect()]
+        times, lats, lons = zarr_axes(df)
         variables = tuple(c for c in df.columns if c not in ("time", "latitude", "longitude"))
         ct, cla, clo = (int(x) for x in args.chunks.split(","))
         meta = ChunkedDatasetMeta(
@@ -194,10 +210,11 @@ def cmd_mv(args: argparse.Namespace) -> int:
         print(f"wrote {n_chunks} chunk(s), vars={list(variables)} -> {args.output}")
         return 0
     # parquet sink: swaps to .format("bigquery") where the connector is
-    # deployed (reference bq.py WriteToBigQuery append semantics)
+    # deployed (reference bq.py WriteToBigQuery append semantics); the
+    # row count is an observed metric of the write job itself
+    df, obs = observe_counts(df, "weather-mv")
     df.write.mode(args.mode).parquet(args.output)
-    n = spark.read.parquet(args.output).count()
-    print(f"wrote {n} row(s) -> {args.output}")
+    print(f"wrote {obs.get['n_rows']} row(s) -> {args.output}")
     return 0
 
 

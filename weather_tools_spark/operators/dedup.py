@@ -347,21 +347,23 @@ def _docs_at_most(docs: DataFrame, bound: int) -> bool:
     full job per query build, ~0.1-0.15 s at sf0.1). Filters above the
     scan make the footer total an upper bound only; that errs toward
     ``False``, and both dispatch targets are value-identical, so the
-    overestimate is safe. Non-file frames fall back to the pushed-down
+    overestimate is safe. Footers are read only for ``file:`` and
+    scheme-less paths: a remote URI's path may name an unrelated local
+    file. Other frames fall back to the pushed-down
     ``limit(bound+1).count()`` probe."""
+    from urllib.parse import unquote, urlparse
+
     try:
         files = docs.inputFiles()
     except Exception:
         files = []
-    if files:
+    if files and {urlparse(f).scheme for f in files} <= {"", "file"}:
         try:
-            from urllib.parse import unquote, urlparse
-
             import pyarrow.parquet as pq
 
             total = 0
             for f in files:
-                p = unquote(urlparse(f).path) if "://" in f or f.startswith("file:") else f
+                p = unquote(urlparse(f).path) if f.startswith("file:") else f
                 total += pq.read_metadata(p).num_rows
                 if total > bound:
                     return False

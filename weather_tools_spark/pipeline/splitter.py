@@ -144,9 +144,7 @@ def split_grib_files_partitioned(spark, paths: list[str], out_dir: str) -> int:
     of output files written."""
     import pandas as pd
 
-    files = spark.createDataFrame([(p,) for p in paths], "path string").repartition(
-        max(1, min(len(paths), spark.sparkContext.defaultParallelism))
-    )
+    files = spark.createDataFrame(pd.DataFrame({"path": paths}), "path string")
 
     def run(batches):
         for pdf in batches:

@@ -303,9 +303,7 @@ def open_ee(
         )
     ox, oy = info["grid"]["origin"]
     px, py = info["grid"]["pixel"]
-    mdf = spark.createDataFrame(manifest).repartition(
-        max(1, min(len(manifest), spark.sparkContext.defaultParallelism))
-    )
+    mdf = spark.createDataFrame(manifest)
 
     def gen(batches):
         client = factory()

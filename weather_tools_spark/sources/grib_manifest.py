@@ -118,9 +118,7 @@ def index_grib_file(path: str) -> pd.DataFrame:
 def build_grib_manifest(spark: SparkSession, paths: list[str]) -> DataFrame:
     """Distributed manifest build: whole files are the unit of
     parallelism; each task walks its file's section headers."""
-    files = spark.createDataFrame([(p,) for p in paths], "path string").repartition(
-        max(1, min(len(paths), spark.sparkContext.defaultParallelism))
-    )
+    files = spark.createDataFrame(pd.DataFrame({"path": paths}), "path string")
 
     def run(batches):
         for pdf in batches:

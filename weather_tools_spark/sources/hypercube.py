@@ -18,7 +18,7 @@ Reference behavior being re-expressed (weather-mv, SURVEY.md §3.2):
 - system columns data_import_time / data_uri / data_first_step
   (bq.py:49-54, 377-379) → ``with_system_columns``.
 
-Spark plan shape: paths-DF → repartition(paths) → mapInPandas(decode)
+Spark plan shape: LocalTableScan(paths) → mapInPandas(decode)
 → [filters] → join(broadcast(geo)) → sink. One file (or one zarr
 chunk) per task; no shuffle until an explicit sink/agg asks for one.
 """
@@ -326,19 +326,18 @@ def ingest(
 ) -> DataFrame:
     """File URIs → long-format row DataFrame.
 
-    The paths collection is repartitioned so each task decodes whole
-    files (the unit of I/O parallelism, exactly one shuffle-free stage);
-    decode emits Arrow batches via mapInPandas. At cluster scale the
-    same plan applies with thousands of files per job.
+    The paths collection is a local relation (LocalTableScan) split into
+    min(files, defaultParallelism) partitions, so each task decodes
+    whole files (the unit of I/O parallelism, exactly one shuffle-free
+    stage); decode emits Arrow batches via mapInPandas. At cluster
+    scale the same plan applies with thousands of files per job.
     """
     opts = opts or IngestOptions()
     if decoder == "auto":
         decode = decode_auto
     else:
         decode = DECODERS[decoder]
-    paths = spark.createDataFrame([(u,) for u in uris], "data_uri string").repartition(
-        max(1, min(len(uris), spark.sparkContext.defaultParallelism))
-    )
+    paths = spark.createDataFrame(pd.DataFrame({"data_uri": uris}), "data_uri string")
 
     data_cols = [f.name for f in schema.fields if f.name not in ("data_uri", "data_first_step")]
 

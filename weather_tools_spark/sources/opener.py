@@ -88,15 +88,15 @@ def _file_frame(
     spark: SparkSession, uris: list[str], decode_one, columns: list[str]
 ) -> DataFrame:
     """One-task-per-file decode plan for single-file formats: the file
-    list is the input frame (repartitioned so whole files are the unit
-    of parallelism), decoding runs in mapInPandas on executors (the
-    driver touched only one header for the schema)."""
+    list is a local relation (``LocalTableScan``, split into
+    min(files, defaultParallelism) partitions with no Python-RDD stage
+    or shuffle), so whole files are the unit of parallelism; decoding
+    runs in mapInPandas on executors (only one header was read up
+    front, for the schema)."""
     schema = ", ".join(
         f"`{c}` {'timestamp' if c == 'time' else 'double'}" for c in columns
     )
-    files = spark.createDataFrame([(u,) for u in uris], "path string").repartition(
-        max(1, min(len(uris), spark.sparkContext.defaultParallelism))
-    )
+    files = spark.createDataFrame(pd.DataFrame({"path": uris}), "path string")
 
     def gen(batches):
         for pdf in batches:

@@ -86,7 +86,11 @@ def chunk_manifest(spark: SparkSession, meta: ChunkedDatasetMeta) -> DataFrame:
                         float(max(lochunk)),
                     )
                 )
-    return spark.createDataFrame(rows, CHUNK_MANIFEST_SCHEMA)
+    # a pandas frame becomes a LocalRelation: Catalyst folds the pruning
+    # filters into it at planning time, and the scan splits the surviving
+    # chunks into min(chunks, defaultParallelism) partitions
+    pdf = pd.DataFrame(rows, columns=CHUNK_MANIFEST_SCHEMA.fieldNames())
+    return spark.createDataFrame(pdf, CHUNK_MANIFEST_SCHEMA)
 
 
 def prune_chunks(
@@ -392,7 +396,7 @@ def scan(
     (747M rows) that is ~30 GB of serialized strings the consumer
     (open_dataset) previously dropped one operator later."""
     manifest = prune_chunks(chunk_manifest(spark, meta), time_range, lat_range, lon_range)
-    rows = manifest.repartition(spark.sparkContext.defaultParallelism).mapInPandas(
+    rows = manifest.mapInPandas(
         _decode_specs(meta, decoder, include_uri=include_uri),
         schema=row_schema(meta, include_uri=include_uri),
     )
