@@ -3,6 +3,9 @@ normalization goldens, geo attachment, zarr chunk pruning."""
 
 from __future__ import annotations
 
+import shutil
+
+import pytest
 from pyspark.sql import functions as F
 
 from weather_tools_spark.sources import hypercube as H
@@ -26,8 +29,10 @@ def test_variable_projection_matching():
     assert not H.matches_variable("xt2m", "t2m")
 
 
-def test_ingest_fake_grid(spark):
-    uris = ["mem://a.nc", "mem://b.nc"]
+def test_ingest_fake_grid(spark, era5_nc, tmp_path):
+    second = str(tmp_path / "b.nc")
+    shutil.copy(era5_nc, second)
+    uris = [era5_nc, second]
     df = H.ingest(spark, uris)
     # 2 files × 3 times × 5 lats × 5 lons
     assert df.count() == 2 * 3 * 5 * 5
@@ -36,9 +41,9 @@ def test_ingest_fake_grid(spark):
     assert len(firsts) == 2  # per-file first step recorded
 
 
-def test_ingest_area_and_time_filter(spark):
+def test_ingest_area_and_time_filter(spark, era5_nc):
     opts = H.IngestOptions(area=(48.0, -107.0, 46.0, -105.0), start_time="2018-01-02 12:00:00")
-    df = H.ingest(spark, ["mem://a.nc"], opts)
+    df = H.ingest(spark, [era5_nc], opts)
     rows = df.collect()
     assert all(46.0 <= r.latitude <= 48.0 for r in rows)
     assert all(-107.0 <= r.longitude <= -105.0 for r in rows)
@@ -47,13 +52,13 @@ def test_ingest_area_and_time_filter(spark):
     assert len(rows) == 2 * 3 * 3
 
 
-def test_ingest_variable_projection(spark):
-    df = H.ingest(spark, ["mem://a.nc"], H.IngestOptions(variables=["d2m"]))
+def test_ingest_variable_projection(spark, era5_nc):
+    df = H.ingest(spark, [era5_nc], H.IngestOptions(variables=["d2m"]))
     assert "d2m" in df.columns and "u10" not in df.columns
 
 
-def test_attach_geo(spark):
-    df = H.ingest(spark, ["mem://a.nc"])
+def test_attach_geo(spark, era5_nc):
+    df = H.ingest(spark, [era5_nc])
     geo = H.attach_geo(df, lat_res=1.0, lon_res=1.0)
     row = geo.filter((F.col("latitude") == 49.0) & (F.col("longitude") == -108.0)).first()
     assert '"type":"Point"' in row.geo_point.replace(" ", "")
@@ -61,8 +66,8 @@ def test_attach_geo(spark):
     assert '"type":"Polygon"' in row.geo_polygon.replace(" ", "")
 
 
-def test_with_system_columns(spark):
-    df = H.ingest(spark, ["mem://a.nc"])
+def test_with_system_columns(spark, era5_nc):
+    df = H.ingest(spark, [era5_nc])
     out = H.with_system_columns(df, import_time="1970-01-01 00:00:00")
     assert out.select(F.min("data_import_time")).first()[0].year == 1970
 
@@ -74,7 +79,7 @@ def _meta() -> Z.ChunkedDatasetMeta:
     lats = [49.0 - i for i in range(8)]  # descending
     lons = [-108.0 + i for i in range(8)]
     return Z.ChunkedDatasetMeta(
-        uri="mem://store.zarr", times=times, lats=lats, lons=lons,
+        uri="store.zarr", times=times, lats=lats, lons=lons,
         chunk_time=24, chunk_lat=2, chunk_lon=2,
     )
 
@@ -123,221 +128,29 @@ def test_merge_normalized_wide_schema(spark):
     assert rows[48.0].isobaricInhPa_850_instant_t is None  # xr.merge-style NULL fill
 
 
-def test_chunked_store_write_read_roundtrip(spark, tmp_path):
-    meta = _meta()
-    original = Z.scan(spark, meta)
-    out = str(tmp_path / "store")
-    Z.write_chunked(original, out, meta)
-    back = Z.read_chunked(spark, out)
-    key = ["time", "latitude", "longitude"]
-    a = original.orderBy(key).toPandas()[["time", "latitude", "longitude", "d2m"]]
-    b = back.orderBy(key).toPandas()[["time", "latitude", "longitude", "d2m"]]
-    assert a.reset_index(drop=True).equals(b.reset_index(drop=True))
-    # chunk layout on disk: one directory per chunk key combination
-    import glob as _glob
-
-    chunk_dirs = _glob.glob(f"{out}/t_idx=*/lat_idx=*/lon_idx=*")
-    assert len(chunk_dirs) == 2 * 4 * 4
-    # partition pruning reaches the directory level on read-back
-    pruned = back.filter("t_idx = 0 AND lat_idx = 1 AND lon_idx = 2")
-    assert pruned.count() == 24 * 2 * 2
+def test_ingest_rejects_missing_and_non_weather_paths(spark, tmp_path):
+    """A typo'd path or a file that is not a weather file fails on the
+    driver, before any job runs."""
+    with pytest.raises(ValueError, match="unable to open dataset"):
+        H.ingest(spark, [str(tmp_path / "era5-typo.nc")])
+    notes = tmp_path / "README.md"
+    notes.write_text("# not a weather file\n")
+    with pytest.raises(ValueError, match="unable to open dataset"):
+        H.ingest(spark, [str(notes)])
 
 
-def test_stream_ingest_chunks_match_batch_scan(spark, tmp_path):
-    """Streaming chunk ingest (foreachBatch) must deliver exactly the
-    rows the batch scan produces, across micro-batches."""
-    meta = _meta()
-    n_chunks = Z.write_chunk_specs(spark, meta, str(tmp_path / "specs"))
-    assert n_chunks == 2 * 4 * 4
-    out_dir = str(tmp_path / "rows")
-    batches = []
-
-    def sink(df, batch_id):
-        batches.append(batch_id)
-        df.write.mode("append").parquet(out_dir)
-
-    q = Z.stream_ingest(
-        spark, meta, str(tmp_path / "specs"), sink,
-        max_chunks_per_trigger=8, checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    assert q.awaitTermination(300), "streaming ingest did not finish in time"
-    got = spark.read.parquet(out_dir)
-    want = Z.scan(spark, meta)
-    assert got.count() == want.count()
-    key = ["time", "latitude", "longitude"]
-    a = got.orderBy(key).toPandas()[key + ["d2m"]].reset_index(drop=True)
-    b = want.orderBy(key).toPandas()[key + ["d2m"]].reset_index(drop=True)
-    assert a.equals(b)
-    # 32 specs at 8 files/trigger → several micro-batches. The spec
-    # files come from write_chunk_specs' round-robin repartition(32),
-    # which can put two specs in one file and leave another partition
-    # empty, so the batch count may be one less than ceil(32/8)
-    assert len(batches) >= 3, batches
-
-
-def test_pruned_scan_equals_full_scan_filtered(spark):
-    meta = _meta()
-    tr = ("2018-01-01 06:00:00", "2018-01-02 06:00:00")
-    la = (46.0, 48.0)
-    lo = (-106.0, -104.0)
-    pruned = Z.scan(spark, meta, time_range=tr, lat_range=la, lon_range=lo).toPandas()
-    full = (
-        Z.scan(spark, meta)
-        .filter(
-            (F.col("time") >= F.lit(tr[0]).cast("timestamp"))
-            & (F.col("time") < F.lit(tr[1]).cast("timestamp"))
-            & F.col("latitude").between(*la)
-            & F.col("longitude").between(*lo)
-        )
-        .toPandas()
-    )
-    key = ["time", "latitude", "longitude"]
-    a = pruned.sort_values(key).reset_index(drop=True)
-    b = full.sort_values(key).reset_index(drop=True)
-    assert a.equals(b)
-    assert len(a) > 0
-
-
-def test_chunked_store_template_consistency(spark, tmp_path):
-    """Template-write parity: consolidated metadata round-trips to the
-    identical template; off-template rows are excluded and reported;
-    read-back planned FROM the metadata (not the data listing) prunes
-    correctly."""
-    import datetime as dt
-
-    meta = _meta()
-    original = Z.scan(spark, meta)
-    out = str(tmp_path / "store")
-    n_bad = Z.write_chunked(original, out, meta)
-    assert n_bad == 0
-    # consolidated metadata round-trips to the same template
-    back_meta = Z.read_consolidated_metadata(out)
-    assert Z.template_dict(back_meta) == Z.template_dict(meta)
-    # planning from the recovered template reproduces the store geometry
-    assert Z.chunk_manifest(spark, back_meta).count() == 2 * 4 * 4
-    # off-template rows (coordinate not on the template axes) are
-    # excluded from the store and reported; strict mode raises
-    stray = spark.createDataFrame(
-        [(dt.datetime(2031, 1, 1), 12.345, 67.89, 1.0, 2.0, 3.0, meta.uri)],
-        Z.ROW_SCHEMA,
-    )
-    polluted = original.unionByName(stray)
-    out2 = str(tmp_path / "store2")
-    try:
-        Z.write_chunked(polluted, out2, meta)
-        raise AssertionError("strict template write should reject stray rows")
-    except ValueError as e:
-        assert "1 rows" in str(e)
-    n_bad2 = Z.write_chunked(polluted, out2, meta, strict=False)
-    assert n_bad2 == 1
-    clean = Z.read_chunked(spark, out2)
-    assert clean.count() == original.count()  # stray row not in the store
-
-
-def test_default_decoder_detection(monkeypatch):
-    # container has no xarray → fake is the runtime default
-    assert H.default_decoder() == "fake"
-
-    # inject a stub xarray module: find_spec must see it and flip the
-    # default to the real branch (reference dispatch sinks.py:437-519)
-    import importlib.machinery
-    import sys
-    import types
-
-    stub = types.ModuleType("xarray")
-    stub.__spec__ = importlib.machinery.ModuleSpec("xarray", loader=None)
-    monkeypatch.setitem(sys.modules, "xarray", stub)
-    assert H.default_decoder() == "xarray"
-
-
-def test_xarray_decode_real_branch(monkeypatch):
-    """Monkeypatched fake xarray exercises the REAL decoder path:
-    store-layout dispatch (zarr store → open_zarr, plain file →
-    open_dataset), time/area .sel slicing with descending-latitude
-    handling, variables projection, and the to_dataframe →
-    reset_index → column-order normalization handoff."""
-    import importlib.machinery
-    import sys
-    import types
-
+def test_ingest_points_zarr_and_geotiff_to_open_dataset(spark, tmp_path):
+    """Zarr stores and GeoTIFFs are weather data but not hypercube
+    files: ingest names the opener that reads them."""
     import numpy as np
-    import pandas as pd
 
-    calls = {}
+    from weather_tools_spark.sources import geotiff as GT
 
-    class FakeAxis:
-        values = np.array([10.0, 5.0, -10.0])  # descending (ERA5 convention)
-
-    class FakeDS:
-        data_vars = {"d2m": None, "u10": None}
-
-        def __getitem__(self, key):
-            if isinstance(key, list):  # variables projection
-                calls["project"] = key
-                return self
-            assert key == "latitude"
-            return FakeAxis()
-
-        def sel(self, **kw):
-            calls.setdefault("sel", []).append(kw)
-            return self
-
-        def to_dataframe(self):
-            return pd.DataFrame(
-                {"d2m": [280.0], "latitude": [1.0],
-                 "longitude": [2.0], "time": [pd.Timestamp("2024-01-01")]}
-            ).set_index("time")
-
-    stub = types.ModuleType("xarray")
-    stub.__spec__ = importlib.machinery.ModuleSpec("xarray", loader=None)
-
-    def open_zarr(path):
-        calls["open_zarr"] = path
-        return FakeDS()
-
-    def open_dataset(path, engine=None):
-        calls["open"] = (path, engine)
-        return FakeDS()
-
-    stub.open_zarr = open_zarr
-    stub.open_dataset = open_dataset
-    monkeypatch.setitem(sys.modules, "xarray", stub)
-
-    opts = H.IngestOptions(start_time="2024-01-01", end_time="2024-01-02",
-                           area=(10.0, -5.0, -10.0, 5.0), variables=["d2m"])
-    out = H._xarray_decode("/data/era5.zarr", opts)
-    assert calls["open_zarr"] == "/data/era5.zarr"
-    assert calls["project"] == ["d2m"]
-    # both slices applied through the real branch; the descending
-    # latitude axis keeps the (north, south) slice orientation
-    assert any("time" in kw for kw in calls["sel"])
-    lat_kw = next(kw for kw in calls["sel"] if "latitude" in kw)
-    assert (lat_kw["latitude"].start, lat_kw["latitude"].stop) == (10.0, -10.0)
-    # long-format normalization: coordinates lead, data vars sorted
-    assert list(out.columns) == ["time", "latitude", "longitude", "d2m"]
-    assert len(out) == 1
-    # a plain .nc path routes through open_dataset with engine=None
-    H._xarray_decode("/data/era5.nc", H.IngestOptions())
-    assert calls["open"] == ("/data/era5.nc", None)
-
-    out2 = H._xarray_decode("/data/tile.tif", opts)
-    assert calls["open"] == ("/data/tile.tif", "rasterio")
-    assert len(out2) == 1
-
-
-def test_auto_decoder_uses_fake_for_mem_uris_even_with_xarray(spark, monkeypatch):
-    """ADVICE r3: on an xarray-equipped cluster, decoder='auto' must NOT
-    route synthetic mem:// URIs to the real branch (they have no bytes
-    to open) — the deterministic fake output must be preserved."""
-    import importlib.machinery
-    import sys
-    import types
-
-    stub = types.ModuleType("xarray")
-    stub.__spec__ = importlib.machinery.ModuleSpec("xarray", loader=None)
-    monkeypatch.setitem(sys.modules, "xarray", stub)
-    assert H.default_decoder() == "xarray"
-
-    got = H.ingest(spark, ["mem://a.nc"]).collect()  # decoder defaults to 'auto'
-    want = H.ingest(spark, ["mem://a.nc"], decoder="fake").collect()
-    assert len(got) > 0 and sorted(map(tuple, got)) == sorted(map(tuple, want))
+    store = tmp_path / "s.zarr"
+    store.mkdir()
+    store = str(store)
+    tif = str(tmp_path / "tile.tif")
+    GT.write_geotiff(tif, np.ones((2, 2)), (8.0, 50.0), (0.25, 0.25))
+    for uri, kind in ((store, "zarr"), (tif, "geotiff")):
+        with pytest.raises(ValueError, match=f"is a {kind} dataset.*open_dataset"):
+            H.ingest(spark, [uri])

@@ -285,3 +285,31 @@ def test_stream_ingest_files_decodes_new_weather_files(spark, tmp_path, source):
     q2.awaitTermination(60)
     assert len(got2) == 6
     assert all(round(r.d2m, 3) == 7.25 for r in got2)
+
+
+def test_stream_ingest_files_fails_on_non_weather_file(spark, tmp_path):
+    """A file that is not a weather file fails the micro-batch through
+    detect's ValueError; the sink never sees a row."""
+    from pyspark.errors import StreamingQueryException
+
+    watch = tmp_path / "incoming"
+    watch.mkdir()
+    N3.write_netcdf3(
+        str(watch / "a.nc"),
+        {"time": np.array([1_700_000_000], dtype=">i4"),
+         "latitude": np.array([49.0]), "longitude": np.array([2.0])},
+        {"d2m": np.array([[[1.5]]])},
+    )
+    (watch / "notes.txt").write_text("not a weather file\n")
+    got = []
+
+    def sink(df, batch_id):
+        got.extend(df.collect())
+
+    q = OP.stream_ingest_files(
+        spark, str(watch), ["time", "latitude", "longitude", "d2m"], sink,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    with pytest.raises(StreamingQueryException, match="unable to open dataset"):
+        q.awaitTermination(60)
+    assert got == []

@@ -14,8 +14,8 @@ from weather_tools_spark.plans import nl
 from weather_tools_spark.sources import hypercube as H
 
 
-def test_regrid_cell_mean_downsample(spark):
-    src = H.ingest(spark, ["mem://a.nc"])  # 1° grid, lats 49..45, lons -108..-104
+def test_regrid_cell_mean_downsample(spark, era5_nc):
+    src = H.ingest(spark, [era5_nc])  # 1° grid, lats 49..45, lons -108..-104
     out = RG.regrid_cell_mean(src, lat_res=2.0, lon_res=2.0, value_cols=["d2m"])
     rows = out.collect()
     # every output point is a 2° cell center
@@ -41,8 +41,8 @@ def test_regrid_cell_mean_downsample(spark):
     assert math.isclose(got[0], sum(cell) / len(cell), rel_tol=1e-9)
 
 
-def test_regrid_bilinear_interpolates(spark):
-    src = H.ingest(spark, ["mem://a.nc"])
+def test_regrid_bilinear_interpolates(spark, era5_nc):
+    src = H.ingest(spark, [era5_nc])
     t0 = src.select(F.min("time")).first()[0]
     # target point exactly between 4 source corners → plain 4-mean
     out = RG.regrid_bilinear(

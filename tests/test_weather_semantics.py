@@ -26,12 +26,12 @@ def test_single_point_grid_disables_polygon(spark):
     assert out.geo_polygon is None  # bq.py:262-264 behavior
 
 
-def test_descending_latitude_strict_bounds(spark):
+def test_descending_latitude_strict_bounds(spark, era5_nc):
     """Reference grids store latitude descending (49→45); strict > / <
     predicates must behave identically to an ascending grid — on a
     discrete grid, label-slice-then-drop-boundary ≡ plain strict
     comparison (SURVEY.md §7.4.2)."""
-    df = H.ingest(spark, ["mem://a.nc"])  # lats 49..45 descending
+    df = H.ingest(spark, [era5_nc])  # lats 49..45 descending
     strict = df.filter(F.col("latitude") > 45.0).select("latitude").distinct().collect()
     assert sorted(r.latitude for r in strict) == [46.0, 47.0, 48.0, 49.0]
     non_strict = df.filter(F.col("latitude") >= 45.0).select("latitude").distinct().collect()

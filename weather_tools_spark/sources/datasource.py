@@ -60,6 +60,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import DoubleType, StructField, StructType, TimestampType
 
+from . import geotiff, grib1, grib2, hdf5, netcdf3
+
 _PUSHABLE_COLS = ("latitude", "longitude", "time")
 
 
@@ -71,6 +73,36 @@ def _expand(path: str) -> list[str]:
 
 
 _COORD_COLS = ("time", "latitude", "longitude")
+
+# The one table from a detected hypercube format (opener.detect) to its
+# stdlib codec: decode(path, opts) → long-format rows, and the header
+# probe that lists the file's data variables without decoding them.
+# Every decoder applies ``opts.variables`` and the ``IngestOptions``
+# area/time comparisons itself. GeoTIFF (no time axis, one value band)
+# is handled beside the table; Zarr stores are chunked, not single
+# files, and scan through zarr_scan.
+CODECS = {
+    "netcdf3": (netcdf3.nc3_decode, netcdf3.list_variables),
+    "netcdf4": (hdf5.nc4_decode, hdf5.list_variables_h5),
+    "grib2": (grib2.grib2_decode, grib2.list_params),
+    "grib1": (grib1.grib1_decode, grib1.list_params1),
+}
+
+
+def hypercube_codec(uri: str):
+    """The ``CODECS`` entry for a NetCDF or GRIB file, classified by
+    ``opener.detect``. Any other weather format raises toward
+    ``open_dataset``, which reads it; a non-weather file raises from
+    ``detect``."""
+    from .opener import detect
+
+    kind = detect(uri)
+    if kind not in CODECS:
+        raise ValueError(
+            f"{uri!r} is a {kind} dataset, not a NetCDF or GRIB file: "
+            "read it with opener.open_dataset"
+        )
+    return CODECS[kind]
 
 
 def _decoder_for(
@@ -89,29 +121,13 @@ def _decoder_for(
     (the reindex backfills NaN, same as an unprojected read)."""
     from types import SimpleNamespace
 
-    if kind == "netcdf3":
-        from .netcdf3 import list_variables, nc3_decode
-
-        decode, available = nc3_decode, sorted(list_variables(first))
-    elif kind == "netcdf4":
-        from .hdf5 import list_variables_h5, nc4_decode
-
-        decode, available = nc4_decode, list_variables_h5(first)
-    elif kind == "grib2":
-        from .grib2 import grib2_decode, list_params
-
-        decode, available = grib2_decode, sorted(set(list_params(first)))
-    elif kind == "grib1":
-        from .grib1 import grib1_decode, list_params1
-
-        decode, available = grib1_decode, sorted(set(list_params1(first)))
-    elif kind == "geotiff":
-        from .geotiff import gtiff_decode
-
+    if kind == "geotiff":
         # single-band value column — nothing variable-level to prune
-        return (lambda p: gtiff_decode(p)), ["latitude", "longitude", "value"]
-    else:
+        return (lambda p: geotiff.gtiff_decode(p)), ["latitude", "longitude", "value"]
+    if kind not in CODECS:
         raise ValueError(f"format {kind!r} has no single-file decoder (zarr: use open_dataset)")
+    decode, probe = CODECS[kind]
+    available = sorted(set(probe(first)))
 
     if variables is not None:
         unknown = sorted(set(variables) - set(available))

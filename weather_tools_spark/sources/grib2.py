@@ -36,7 +36,7 @@ implements that profile directly:
   non-matching messages are skipped by section length without
   unpacking section 7;
 - :func:`grib2_decode` — file → long-format rows for the hypercube
-  ingest (``DECODERS["grib2"]``), with the standard WMO parameter
+  ingest (``CODECS["grib2"]``), with the standard WMO parameter
   table for the engine's variables: 2-metre dewpoint d2m=(0,0,6),
   10-metre winds u10=(0,2,2) / v10=(0,2,3);
 - :func:`write_grib2_partitioned` — distributed sink: one whole

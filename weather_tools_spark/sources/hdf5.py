@@ -20,8 +20,8 @@ object headers with compact link messages — the layout h5py's
 ``libver='latest'`` emits — AND dense (fractal-heap) group storage:
 link messages resolved out of FRHP/FHDB heap blocks through the v2
 B-tree name index, the layout libraries switch to above ~8 links (the
-many-variable NetCDF-4 case). Remaining gates (clear errors toward
-the xarray branch): huge/tiny heap IDs, filtered heap blocks, B-tree
+many-variable NetCDF-4 case). Remaining gates (clear
+NotImplementedError): huge/tiny heap IDs, filtered heap blocks, B-tree
 depth > 1, multi-level indirect blocks, virtual/external layouts.
 
 NetCDF-4 semantics on top of raw HDF5 follow the same CF conventions
@@ -29,7 +29,7 @@ as the classic codec (sources/netcdf3.py): coordinate variables are
 1-D datasets named ``time``/``latitude``/``longitude`` (time carries
 the epoch ``units`` attribute), data variables are float hypercubes
 over those axes. :func:`nc4_decode` is the hypercube-ingest decoder
-(``DECODERS["netcdf4"]``); :func:`write_netcdf4_partitioned` is the
+(``CODECS["netcdf4"]``); :func:`write_netcdf4_partitioned` is the
 distributed file-per-day sink.
 """
 

@@ -2,7 +2,8 @@
 
 Reference behavior being re-expressed (weather-mv, SURVEY.md §3.2):
 - engine-dispatch file open (zarr/tif/netcdf/grib with edition fallback,
-  sinks.py:437-519) → ``DECODERS`` registry keyed by extension;
+  sinks.py:437-519) → ``opener.detect`` by magic bytes, then the
+  shared format table ``datasource.CODECS``;
 - variable projection incl. normalized-name prefix/suffix matching
   (util.py:159-191) → ``select_variables``;
 - GRIB schema normalization to ``<level>_<height>_<stepType>_<var>``
@@ -11,25 +12,22 @@ Reference behavior being re-expressed (weather-mv, SURVEY.md §3.2):
 - coordinate-space explosion to rows (util.py:207-237, bq.py:338-386)
   → decode emits long-format pandas batches via ``mapInPandas``;
 - area/time filter *before* explosion (bq.py:332-335) → pushed into the
-  decoder via ``IngestOptions`` (chunk-level pruning) AND re-applied as
-  DataFrame filters (Catalyst prunes post-hoc);
+  decoder via ``IngestOptions``: every codec drops the rows itself;
 - geo columns via broadcast join against the grid lookup
   (bq.py:197-238, 344-375) → ``attach_geo``;
 - system columns data_import_time / data_uri / data_first_step
   (bq.py:49-54, 377-379) → ``with_system_columns``.
 
 Spark plan shape: LocalTableScan(paths) → mapInPandas(decode)
-→ [filters] → join(broadcast(geo)) → sink. One file (or one zarr
+→ join(broadcast(geo)) → sink. One file (or one zarr
 chunk) per task; no shuffle until an explicit sink/agg asks for one.
 """
 
 from __future__ import annotations
 
-import hashlib
-from dataclasses import dataclass, field
-from typing import Callable, Iterator
+from dataclasses import dataclass
+from typing import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -123,208 +121,21 @@ class IngestOptions:
     lon_res: float = 1.0
 
 
-DecoderFn = Callable[[str, IngestOptions], pd.DataFrame]
-
-
-def _fake_grid_decode(path: str, opts: IngestOptions) -> pd.DataFrame:
-    """Deterministic fake decoder (container has no xarray/cfgrib): emits
-    a small regular grid derived from the path hash. Stands in for the
-    real decode so the mapInPandas plumbing is exercised end-to-end.
-    """
-    seed = int(hashlib.md5(path.encode()).hexdigest()[:8], 16)
-    rng = np.random.RandomState(seed)
-    lats = np.arange(49.0, 44.0, -1.0)  # descending, like ERA5 grids
-    lons = np.arange(-108.0, -103.0, 1.0)
-    times = pd.date_range("2018-01-02T06:00:00", periods=3, freq="6h")
-    tt, la, lo = np.meshgrid(times, lats, lons, indexing="ij")
-    n = tt.size
-    return pd.DataFrame(
-        {
-            "time": tt.ravel(),
-            "latitude": la.ravel().astype(float),
-            "longitude": lo.ravel().astype(float),
-            "d2m": (rng.rand(n) * 150 + 180).round(4),
-            "u10": (rng.rand(n) * 60 - 30).round(4),
-            "v10": (rng.rand(n) * 60 - 30).round(4),
-        }
-    )
-
-
-def _xarray_decode(path: str, opts: IngestOptions) -> pd.DataFrame:
-    """Library-backed decoder: xarray engine-dispatch (zarr → rasterio
-    → netcdf → cfgrib-with-edition-fallback; the reference's
-    weather_mv/loader_pipeline/sinks.py:437-519). Engine selection is
-    by magic bytes / store layout, mirroring ``decode_auto``; GRIB
-    retries edition 1 the way the reference retries cfgrib with
-    ``{'edition': 1}``. Gates with NotImplementedError when xarray is
-    absent (this container); when the libraries ARE present,
-    tests/test_conformance_optional.py asserts cell-level equality of
-    this branch against every stdlib codec."""
-    try:
-        import xarray as xr  # type: ignore
-    except ImportError as e:
-        raise NotImplementedError(
-            "xarray not installed in this environment; the stdlib codecs "
-            "(netcdf3/netcdf4/grib1/grib2) cover the standard layouts"
-        ) from e
-    import os as _os
-
-    from .grib1 import is_grib1
-    from .grib2 import is_grib2
-
-    if _os.path.isdir(path) or path.rstrip("/").endswith(".zarr"):
-        ds = xr.open_zarr(path)
-    elif path.endswith((".tif", ".tiff")):
-        ds = xr.open_dataset(path, engine="rasterio")
-    elif is_grib2(path) or is_grib1(path):
-        try:
-            ds = xr.open_dataset(path, engine="cfgrib")
-        except Exception:
-            # reference edition fallback (sinks.py:370-389)
-            ds = xr.open_dataset(
-                path, engine="cfgrib",
-                backend_kwargs={"filter_by_keys": {"edition": 1}},
-            )
-    else:
-        ds = xr.open_dataset(path)
-    variables = getattr(opts, "variables", None) if opts is not None else None
-    if variables:
-        ds = ds[[v for v in variables if v in ds.data_vars]]
-    if opts is not None and (opts.start_time or opts.end_time):
-        ds = ds.sel(time=slice(opts.start_time, opts.end_time))
-    if opts is not None and opts.area:
-        n, w, s, e = opts.area
-        lat = ds["latitude"].values
-        lat_slice = slice(n, s) if len(lat) > 1 and lat[0] > lat[-1] else slice(s, n)
-        ds = ds.sel(latitude=lat_slice, longitude=slice(w, e))
-    pdf = ds.to_dataframe().reset_index()
-    # normalize to the long-format contract the stdlib codecs emit
-    order = [c for c in ("time", "latitude", "longitude") if c in pdf.columns]
-    rest = [c for c in pdf.columns if c not in order]
-    return pdf[order + sorted(rest)]
-
-
-def _nc3_decode(path: str, opts: IngestOptions) -> pd.DataFrame:
-    """Classic NetCDF (CDF-1/2) decode, stdlib-only — no xarray needed
-    for the classic format (sources/netcdf3.py). NetCDF-4/HDF5 files
-    still require the xarray branch."""
-    from .netcdf3 import nc3_decode
-
-    return nc3_decode(path, opts)
-
-
-def _grib2_decode(path: str, opts: IngestOptions) -> pd.DataFrame:
-    """GRIB2 decode, stdlib-only — simple-packing profile with message
-    filter pushdown (sources/grib2.py)."""
-    from .grib2 import grib2_decode
-
-    return grib2_decode(path, opts)
-
-
-def _grib1_decode(path: str, opts: IngestOptions) -> pd.DataFrame:
-    """GRIB edition-1 decode, stdlib-only (sources/grib1.py) — the
-    reference's edition fallback (sinks.py:370-389, cfgrib retry with
-    ``{'edition': 1}``) realized as a second stdlib codec instead of a
-    gate."""
-    from .grib1 import grib1_decode
-
-    return grib1_decode(path, opts)
-
-
-def _nc4_decode(path: str, opts: IngestOptions) -> pd.DataFrame:
-    """NetCDF-4/HDF5 decode, stdlib-only subset (sources/hdf5.py):
-    superblock v0-v3, v1/v2 object headers, contiguous + chunked
-    B-tree layouts, shuffle+deflate filters. Unsupported HDF5
-    structures raise toward the xarray branch."""
-    from .hdf5 import nc4_decode
-
-    return nc4_decode(path, opts)
-
-
-DECODERS: dict[str, DecoderFn] = {
-    "fake": _fake_grid_decode,
-    "xarray": _xarray_decode,
-    "netcdf3": _nc3_decode,
-    "netcdf4": _nc4_decode,
-    "grib2": _grib2_decode,
-    "grib1": _grib1_decode,
-}
-
-
-def _is_classic_netcdf(path: str) -> bool:
-    """Magic-byte probe: classic NetCDF starts 'CDF\\x01'/'CDF\\x02'/
-    'CDF\\x05' (CDF-5, 64-bit data). NetCDF-4/HDF5 starts '\\x89HDF'
-    and routes to the stdlib HDF5 subset codec (sources/hdf5.py)."""
-    import os
-
-    try:
-        if not os.path.isfile(path):
-            return False
-        with open(path, "rb") as f:
-            return f.read(4) in (b"CDF\x01", b"CDF\x02", b"CDF\x05")
-    except OSError:
-        return False
-
-
-def decode_auto(uri: str, opts: IngestOptions) -> pd.DataFrame:
-    """Per-URI magic-byte dispatch (the reference's engine-dispatch
-    open, sinks.py:437-519): synthetic mem:// URIs always decode with
-    the deterministic fake (they have no on-disk bytes for a real
-    library to open); classic NetCDF ('CDF'), HDF5 ('\\x89HDF'), and
-    GRIB (edition byte) route to their stdlib codecs; everything else
-    gets the probed decoder — so the suite stays green on
-    xarray-equipped clusters while real files still decode."""
-    from .grib1 import is_grib1
-    from .grib2 import is_grib2
-    from .hdf5 import is_hdf5
-
-    if uri.startswith("mem://"):
-        name = "fake"
-    elif _is_classic_netcdf(uri):
-        name = "netcdf3"
-    elif is_hdf5(uri):
-        name = "netcdf4"
-    elif is_grib2(uri):
-        name = "grib2"
-    elif is_grib1(uri):
-        name = "grib1"  # the reference's edition fallback
-    else:
-        name = default_decoder()
-    return DECODERS[name](uri, opts)
-
-
-def default_decoder() -> str:
-    """Runtime decoder detection (reference dispatch: sinks.py:437-519):
-    the real xarray branch activates automatically on any cluster where
-    the decode stack is installed; this container lacks it, so the
-    deterministic fake stays the default. Probed per call (cheap — a
-    finder scan, no import) so tests can inject a stub module."""
-    import importlib.util
-
-    return "xarray" if importlib.util.find_spec("xarray") is not None else "fake"
-
-ROW_SCHEMA = T.StructType(
-    [
-        T.StructField("time", T.TimestampType()),
-        T.StructField("latitude", T.DoubleType()),
-        T.StructField("longitude", T.DoubleType()),
-        T.StructField("d2m", T.DoubleType()),
-        T.StructField("u10", T.DoubleType()),
-        T.StructField("v10", T.DoubleType()),
-        T.StructField("data_uri", T.StringType()),
-        T.StructField("data_first_step", T.TimestampType()),
-    ]
-)
-
-
 def ingest(
     spark: SparkSession,
     uris: list[str],
     opts: IngestOptions | None = None,
-    decoder: str = "auto",
-    schema: T.StructType = ROW_SCHEMA,
+    schema: T.StructType | None = None,
 ) -> DataFrame:
-    """File URIs → long-format row DataFrame.
+    """NetCDF/GRIB file URIs → long-format row DataFrame.
+
+    Every URI is classified on the driver with ``opener.detect`` (the
+    reference's engine-dispatch open, sinks.py:437-519) and decoded by
+    its codec from the shared format table (``datasource.CODECS``),
+    which applies ``opts``' variables, area and time itself. Zarr
+    stores and GeoTIFFs are not hypercube files: they raise toward
+    ``opener.open_dataset``. Without ``schema`` the columns are the
+    coordinates plus the first file's data variables.
 
     The paths collection is a local relation (LocalTableScan) split into
     min(files, defaultParallelism) partitions, so each task decodes
@@ -332,11 +143,23 @@ def ingest(
     stage); decode emits Arrow batches via mapInPandas. At cluster
     scale the same plan applies with thousands of files per job.
     """
+    from .datasource import hypercube_codec
+
     opts = opts or IngestOptions()
-    if decoder == "auto":
-        decode = decode_auto
-    else:
-        decode = DECODERS[decoder]
+    codecs = {uri: hypercube_codec(uri) for uri in uris}
+    if schema is None:
+        _, probe = codecs[uris[0]]
+        variables = sorted(set(probe(uris[0])))
+        schema = T.StructType(
+            [
+                T.StructField(c, T.TimestampType() if c == "time" else T.DoubleType())
+                for c in ("time", "latitude", "longitude", *variables)
+            ]
+            + [
+                T.StructField("data_uri", T.StringType()),
+                T.StructField("data_first_step", T.TimestampType()),
+            ]
+        )
     paths = spark.createDataFrame(pd.DataFrame({"data_uri": uris}), "data_uri string")
 
     data_cols = [f.name for f in schema.fields if f.name not in ("data_uri", "data_first_step")]
@@ -344,19 +167,8 @@ def ingest(
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for uri in pdf["data_uri"]:
+                decode, _ = codecs[uri]
                 rows = decode(uri, opts)
-                if opts.area is not None:
-                    n, w, s, e = opts.area
-                    rows = rows[
-                        (rows["latitude"] <= n)
-                        & (rows["latitude"] >= s)
-                        & (rows["longitude"] >= w)
-                        & (rows["longitude"] <= e)
-                    ]
-                if opts.start_time is not None:
-                    rows = rows[rows["time"] >= pd.Timestamp(opts.start_time)]
-                if opts.end_time is not None:
-                    rows = rows[rows["time"] < pd.Timestamp(opts.end_time)]
                 out = rows.reindex(columns=data_cols)
                 out["data_uri"] = uri
                 out["data_first_step"] = rows["time"].min() if len(rows) else pd.NaT

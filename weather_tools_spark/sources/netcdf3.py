@@ -18,8 +18,8 @@ file offsets. This module implements that layout directly:
 - :func:`read_netcdf3` — parse the header and decode variables with
   ``np.frombuffer``;
 - :func:`nc3_decode` — the hypercube-ingest decoder
-  (``DECODERS["netcdf3"]`` in sources/hypercube.py): file → long-format
-  rows, same output contract as the xarray branch.
+  (``CODECS["netcdf3"]`` in sources/datasource.py): file → long-format
+  rows, the output contract every stdlib decoder shares.
 
 Scope: fixed-size AND record (unlimited-dimension) variables — the
 interleaved record layout growable-time exports use — over the six
@@ -229,6 +229,19 @@ def _read_atts(buf: bytes, p: int, version: int) -> tuple[dict, int]:
     return atts, p
 
 
+def is_netcdf3(path: str) -> bool:
+    """Magic-byte probe: classic NetCDF starts 'CDF\\x01'/'CDF\\x02'/
+    'CDF\\x05' (CDF-5, 64-bit data). NetCDF-4/HDF5 starts '\\x89HDF'
+    and routes to the stdlib HDF5 subset codec (sources/hdf5.py)."""
+    try:
+        if not os.path.isfile(path):
+            return False
+        with open(path, "rb") as f:
+            return f.read(4) in _MAGICS
+    except OSError:
+        return False
+
+
 def list_variables(path: str) -> list[str]:
     """Data-variable names from the header alone — a metadata probe
     (footer-read analog): reads a bounded prefix, doubling on a
@@ -391,8 +404,8 @@ def _cf_unpack(arr: np.ndarray, atts: dict) -> np.ndarray:
 
 def nc3_decode(path: str, opts) -> pd.DataFrame:
     """Hypercube-ingest decoder over classic NetCDF bytes — the
-    ``DECODERS["netcdf3"]`` branch (same output contract as the xarray
-    branch: long-format time/latitude/longitude + variable columns).
+    ``CODECS["netcdf3"]`` entry (long-format time/latitude/longitude +
+    variable columns, the contract every stdlib decoder shares).
     Time decoded from the CF ``units`` epoch attribute (any
     "<unit> since <epoch>" spelling); packed variables unpacked via
     scale_factor/add_offset with fill sentinels → NaN.

@@ -43,7 +43,7 @@ def detect(uri: str) -> str:
     from .grib1 import is_grib1
     from .grib2 import is_grib2
     from .hdf5 import is_hdf5
-    from .hypercube import _is_classic_netcdf
+    from .netcdf3 import is_netcdf3
     from .zarr_v2 import ZMETADATA
 
     if uri.startswith("ee://"):
@@ -68,7 +68,7 @@ def detect(uri: str) -> str:
         or uri.rstrip("/").endswith(".zarr")
     ):
         return "zarr"
-    if _is_classic_netcdf(uri):
+    if is_netcdf3(uri):
         return "netcdf3"
     if is_hdf5(uri):
         return "netcdf4"
@@ -193,23 +193,14 @@ def open_dataset(
             meta = dataclasses.replace(
                 meta, variables=tuple(v for v in meta.variables if v in set(variables))
             )
-        df = ZS.scan(
-            spark, meta, time_range, lat_range, lon_range,
-            decoder="zarr2", include_uri=False,
-        )
+        df = ZS.scan(spark, meta, time_range, lat_range, lon_range, include_uri=False)
     else:
-        if kind == "geotiff":  # no time axis, single value band
-            from .geotiff import gtiff_decode
+        # single-file formats share the decoder pairing — projection
+        # pushdown included — with format("weather")
+        from .datasource import _decoder_for
 
-            cols = ["latitude", "longitude", "value"]
-            df = _file_frame(spark, uris, lambda p: gtiff_decode(p), cols)
-        else:
-            # single-file hypercube formats share the decoder pairing —
-            # projection pushdown included — with format("weather")
-            from .datasource import _decoder_for
-
-            decode_one, cols = _decoder_for(kind, uris[0], variables)
-            df = _file_frame(spark, uris, decode_one, cols)
+        decode_one, cols = _decoder_for(kind, uris[0], variables)
+        df = _file_frame(spark, uris, decode_one, cols)
         if time_range is not None and "time" in df.columns:
             df = df.filter(
                 (F.col("time") >= F.lit(time_range[0]).cast("timestamp"))
@@ -284,10 +275,12 @@ def stream_ingest_files(
     New files landing in ``watch_dir`` are the event source (the
     file-source analog of object-finalize notifications);
     ``maxFilesPerTrigger`` bounds files per micro-batch. Each
-    micro-batch decodes WHOLE files on executors through the
-    magic-byte auto dispatch (hypercube.decode_auto — classic NetCDF /
-    HDF5 / GRIB1 / GRIB2, no libraries), then hands the long-format
-    rows to ``sink_fn(df, batch_id)`` via foreachBatch. Only the
+    micro-batch decodes WHOLE files on executors: ``detect`` classifies
+    each file by magic bytes and its codec from the shared format table
+    (``datasource.CODECS`` — classic NetCDF / HDF5 / GRIB1 / GRIB2, no
+    libraries) decodes it, then the long-format rows go to
+    ``sink_fn(df, batch_id)`` via foreachBatch. A file in any other
+    format fails the micro-batch with a ``ValueError``. Only the
     ``path`` column is selected from the binaryFile source, so file
     CONTENT is never shipped through the stream — decode re-reads
     bytes executor-side, keeping the micro-batch plan metadata-sized.
@@ -296,7 +289,7 @@ def stream_ingest_files(
 
     Returns the started StreamingQuery (caller awaits/stops it).
     """
-    from .hypercube import IngestOptions, decode_auto
+    from .datasource import hypercube_codec
 
     if source == "files":
         files = (
@@ -330,13 +323,13 @@ def stream_ingest_files(
     schema = ", ".join(
         f"`{c}` {'timestamp' if c == 'time' else 'double'}" for c in columns
     )
-    opts = IngestOptions()
 
     def gen(batches):
         for pdf in batches:
             for p in pdf["path"]:
                 local = p[5:] if p.startswith("file:") else p
-                yield decode_auto(local, opts).reindex(columns=columns)
+                decode, _ = hypercube_codec(local)
+                yield decode(local, None).reindex(columns=columns)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         rows = batch_df.repartition(

@@ -18,7 +18,7 @@ value). This module implements that format directly:
 - :func:`open_zarr_v2` — plan a scan from ONE consolidated-metadata
   read (the point of ``.zmetadata`` on object stores).
 - :func:`decode_chunk` — bytes → numpy for the ``zlib``/raw codecs,
-  used by ``zarr_scan._decode_specs(decoder="zarr2")`` inside the
+  used by :func:`zarr2_decode_specs`, the kernel of ``zarr_scan.scan``'s
   pruned ``mapInPandas`` scan.
 
 Compressor support: None (raw), zlib, gzip (v3), and the blosc1
@@ -555,9 +555,15 @@ def _distributed_chunk_write(
 ) -> int:
     """Shared executor stage for both format versions: shuffle rows to
     their owning chunk, one ``applyInPandas`` task assembles and writes
-    each (padded) chunk file for every variable."""
+    each (padded) chunk file for every variable.
+
+    Rows whose coordinates are not on the template axes have no chunk:
+    they are counted by an observation on the same job, left out of the
+    store, and reported by a ``ValueError`` after the write."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
+
+    from weather_tools_spark.operators.metrics import observe_counts
 
     times = pd.to_datetime(meta.times)
     chunks = (meta.chunk_time, meta.chunk_lat, meta.chunk_lon)
@@ -568,10 +574,15 @@ def _distributed_chunk_write(
     t_map = F.create_map(*[x for kv in t_gi.items() for x in (F.lit(kv[0]), F.lit(kv[1]))])
     la_map = F.create_map(*[x for kv in la_gi.items() for x in (F.lit(kv[0]), F.lit(kv[1]))])
     lo_map = F.create_map(*[x for kv in lo_gi.items() for x in (F.lit(kv[0]), F.lit(kv[1]))])
-    keyed = (
+    located = (
         rows.withColumn("_gt", t_map[F.col("time").cast("string")])
         .withColumn("_gla", la_map[F.col("latitude")])
         .withColumn("_glo", lo_map[F.col("longitude")])
+    )
+    off_template = F.col("_gt").isNull() | F.col("_gla").isNull() | F.col("_glo").isNull()
+    located, obs = observe_counts(located, "zarr_sink", off_template=off_template)
+    keyed = (
+        located.filter(~off_template)
         .withColumn("t_idx", (F.col("_gt") / chunks[0]).cast("int"))
         .withColumn("lat_idx", (F.col("_gla") / chunks[1]).cast("int"))
         .withColumn("lon_idx", (F.col("_glo") / chunks[2]).cast("int"))
@@ -612,6 +623,12 @@ def _distributed_chunk_write(
         .applyInPandas(write_chunk, schema=out_schema)
         .count()
     )
+    n_off = int(obs.get["off_template"] or 0)
+    if n_off:
+        raise ValueError(
+            f"{n_off} rows fall outside the store template axes; "
+            "they were excluded from the written store"
+        )
     return int(written)
 
 
@@ -1032,7 +1049,7 @@ def _decode_shard(buf: bytes, za: dict) -> np.ndarray:
 def zarr2_decode_specs(meta: ChunkedDatasetMeta, include_uri: bool = True):
     """Chunk-spec → long-rows kernel over a real Zarr v2 store at
     ``meta.uri`` — the real-decoder branch of
-    ``zarr_scan._decode_specs``. Per task: one metadata read, then
+    ``zarr_scan.scan`` and ``zarr_scan.stream_ingest``. Per task: one metadata read, then
     whole-chunk decodes; coordinates come from the (small) template
     axes carried in the closure, values byte-exact from the store."""
     times = pd.to_datetime(meta.times)
